@@ -1192,18 +1192,16 @@ def build_ivf_index(
         )
         assigned = pq_encode(assigned, codebooks, vec_col="embedding")
 
-    # the cells dir is a pointer-committed generation store (round 7,
-    # shared layout with the signature/sketch/span stores): a build is
-    # a full (re)create — clear any prior generations, write gen-0,
-    # commit the pointer only after the parquet write succeeds
+    # the cells dir is a generation store like every other
+    # (store_fs.write_batch): a build is a full (re)create — clear any
+    # prior generations, then write batch 0 into a fresh gen-0
     from . import store_fs
-    from .signature_store import _begin_store_write, _commit_store_init
 
     cells_base = os.path.join(path, "cells")
     store_fs.delete_dir(cells_base, ignore_missing=True)
-    root, _ = _begin_store_write(cells_base)
-    assigned.write.mode("overwrite").partitionBy("cell", "batch_id").parquet(root)
-    _commit_store_init(cells_base)
+    store_fs.write_batch(
+        cells_base, assigned, batch_id=0, partition_by=("cell", "batch_id")
+    )
     if codebooks is not None:
         # batch-0 health row: the codebooks' residual on the BUILD data
         # is the drift baseline every later batch is compared against
@@ -1262,9 +1260,9 @@ def ivf_index_topk(
         .filter(F.col("cell_rank") <= nprobe)
         .select("query_id", "qv", "qn", "cell")
     )
-    from .signature_store import _read_store
+    from . import store_fs
 
-    cells = _read_store(spark, os.path.join(path, "cells"))
+    cells = store_fs.read_store(spark, os.path.join(path, "cells"))
     if cells is None:
         raise FileNotFoundError(
             f"IVF index {path} has no committed cells generation"
@@ -1377,37 +1375,16 @@ def ivf_index_append(
     if books is not None:
         assigned = pq_encode(assigned, books, vec_col="embedding")
     from . import store_fs
-    from .signature_store import _read_store, ensure_no_orphan_generation
 
     cells_base = os.path.join(path, "cells")
-    ensure_no_orphan_generation(cells_base)
-    root = store_fs.resolve_current(cells_base)
-    if root is None:
+    if store_fs.ensure_no_orphan_generation(cells_base) is None:
         raise FileNotFoundError(
             f"IVF index {path} has no committed cells generation — "
             "build_ivf_index first (appends never implicitly create an index)"
         )
-    if batch_id is None:
-        prev = (
-            _read_store(spark, cells_base)
-            .agg(F.max("batch_id"))
-            .collect()[0][0]
-        )
-        bid = 0 if prev is None else int(prev) + 1
-    else:
-        bid = int(batch_id)
-    assigned = assigned.withColumn("batch_id", F.lit(bid).cast("int"))
-    if batch_id is None:
-        assigned.write.mode("append").partitionBy("cell", "batch_id").parquet(
-            root
-        )
-    else:
-        (
-            assigned.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("cell", "batch_id")
-            .parquet(root)
-        )
+    bid = store_fs.write_batch(
+        cells_base, assigned, batch_id=batch_id, partition_by=("cell", "batch_id")
+    )
     if books is not None:
         # per-batch health row with the batch's own exactly-once
         # contract: a replayed explicit batch_id replaces its own
@@ -1490,9 +1467,9 @@ def ivf_index_adc_topk(
         )
     )
 
-    from .signature_store import _read_store
+    from . import store_fs
 
-    cells = _read_store(spark, os.path.join(path, "cells"))
+    cells = store_fs.read_store(spark, os.path.join(path, "cells"))
     if cells is None:
         raise FileNotFoundError(
             f"IVF index {path} has no committed cells generation"
@@ -1566,10 +1543,10 @@ def compact_ivf_cells(spark, path: str) -> int:
     stores. Returns the number of batches folded."""
     import os
 
-    from .signature_store import _read_store, swap_in_generation
+    from . import store_fs
 
     cells_path = os.path.join(path, "cells")
-    cells = _read_store(spark, cells_path)
+    cells = store_fs.read_store(spark, cells_path)
     if cells is None:
         return 0
     n_batches = cells.select("batch_id").distinct().count()
@@ -1587,7 +1564,7 @@ def compact_ivf_cells(spark, path: str) -> int:
             tmp
         )
 
-    swap_in_generation(cells_path, _write)
+    store_fs.swap_in_generation(cells_path, _write)
     return n_batches
 
 
@@ -1603,11 +1580,10 @@ def expire_ivf_batches(path: str, keep_from_batch: int) -> list[str]:
     the shared maintenance lease (vs compact_ivf_cells' swap). Returns
     the removed partition paths (cell-relative)."""
     from . import store_fs
-    from .signature_store import maintenance_lease
 
     cells_path = store_fs.join(path, "cells")
     removed = []
-    with maintenance_lease(cells_path):
+    with store_fs.maintenance_lease(cells_path):
         root = store_fs.resolve_current(cells_path)
         if root is None:
             return []

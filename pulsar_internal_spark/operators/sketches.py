@@ -6,10 +6,10 @@ sketch of a union is the cell-wise sum of the sketches of its parts.
 That single property gives the whole incremental story for free — each
 ingest batch is sketched ONCE (per-batch cells written under its
 batch_id, idempotently), and serving reads sum the cells — no batch
-ever re-reads another batch's tokens. Mirrors the layout and
-exactly-once contract of signature_store.py (hive-partitioned by
-batch_id; dynamic partition overwrite makes a retried streaming batch
-replace its own partition), grown from the reference's incremental
+ever re-reads another batch's tokens. Shares the layout and
+exactly-once contract of every generation store (store_fs.write_batch:
+hive-partitioned by batch_id; dynamic partition overwrite makes a
+retried streaming batch replace its own partition), grown from the reference's incremental
 memo idiom (script.hpp:127-129: compute once, look up thereafter).
 
 Scale posture: a batch's sketch is d*w cells regardless of batch size;
@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import store_fs
 
 # Enforced at read time (serve_sketch) so a layout drift in the writer
 # fails loudly instead of silently misreading cells.
@@ -93,37 +95,12 @@ def append_sketch_batch(
     reprocessed content became empty still REPLACES its old partition
     (the replace-on-retry contract would silently not hold for a
     zero-row dynamic overwrite)."""
-    from .signature_store import (
-        _begin_store_write,
-        _commit_store_init,
-        _read_store,
-        ensure_no_orphan_generation,
-    )
-
-    ensure_no_orphan_generation(store_path)
-    root, init = _begin_store_write(store_path)
-    if batch_id is None:
-        existing = None if init else _read_store(spark, store_path)
-        batch_id = (
-            0
-            if existing is None
-            else existing.select(F.max("batch_id")).first()[0] + 1
-        )
     cells = countmin_cells(tokens_df, token_col, depth=depth)
     zero = spark.createDataFrame([(0, 0, 0)], "r INT, bucket BIGINT, cell BIGINT")
     cells = cells.unionByName(zero).groupBy("r", "bucket").agg(
         F.sum("cell").cast("long").alias("cell")
     )
-    cells = cells.withColumn("batch_id", F.lit(batch_id).cast("int"))
-    (
-        cells.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(root)
-    )
-    if init:
-        _commit_store_init(store_path)
-    return batch_id
+    return store_fs.write_batch(store_path, cells, batch_id=batch_id)
 
 
 def serve_sketch(spark: SparkSession, store_path: str) -> DataFrame:
@@ -137,9 +114,7 @@ def serve_sketch(spark: SparkSession, store_path: str) -> DataFrame:
     absent cell are the same sketch state (estimate_counts zero-fills
     on its left join), so serving stays bit-identical to the one-shot
     sketch."""
-    from .signature_store import _read_store
-
-    df = _read_store(spark, store_path)
+    df = store_fs.read_store(spark, store_path)
     if df is None:
         raise FileNotFoundError(
             f"sketch store {store_path} has no committed generation"
@@ -199,7 +174,7 @@ def compact_sketch_store(spark: SparkSession, store_path: str) -> int:
     dir (which would brick schema inference for the next auto
     append). Returns the number of batches folded into the base.
     Staging/swap and the crashed-swap recovery guard are shared with
-    signature_store (swap_in_generation — one copy of the crash
+    every store (store_fs.swap_in_generation — one copy of the crash
     posture).
 
     MAINTENANCE WINDOW CONTRACT (same as signature_store.compact_store):
@@ -208,9 +183,7 @@ def compact_sketch_store(spark: SparkSession, store_path: str) -> int:
     vanish with the superseded generation. Readers see a complete
     generation (old or new, never torn data) and the store stays
     continuously readable across the flip (see swap_in_generation)."""
-    from .signature_store import _read_store, swap_in_generation
-
-    store = _read_store(spark, store_path)
+    store = store_fs.read_store(spark, store_path)
     if store is None:
         return 0
     ids = sorted(r.batch_id for r in store.select("batch_id").distinct().collect())
@@ -234,5 +207,5 @@ def compact_sketch_store(spark: SparkSession, store_path: str) -> int:
     def _write(tmp: str) -> None:
         out.write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
 
-    swap_in_generation(store_path, _write)
+    store_fs.swap_in_generation(store_path, _write)
     return len(ids) - 1

@@ -9,8 +9,8 @@ k-grams against the store — the same incremental shape as
 signature_store.py (MinHash) and sketches.py (count-min), completing the
 family for the exact-substring tier.
 
-Store layout: pointer-committed generation store (see signature_store /
-store_fs, round 7) whose live generation holds parquet columns
+Store layout: pointer-committed generation store (store_fs; appends go
+through store_fs.write_batch) whose live generation holds parquet columns
 (kh, owner_doc, batch_id), hive-partitioned by ``batch_id`` — one row per
 k-gram hash FIRST SEEN in that batch (appends anti-join history, so the
 store is the distinct k-gram set, not the occurrence stream). History
@@ -45,19 +45,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import bloomjoin
+from . import bloomjoin, store_fs
 from .dedup import dup_span_intervals, tokenized
 from ..sources.tables import spread
 from ..staging import persistent_rdd_ids, release_staged, stage
-from .signature_store import (
-    _begin_store_write,
-    _commit_store_init,
-    _read_sink,
-    _read_store,
-    _sink_delete_batch,
-    _sink_write_batch,
-    ensure_no_orphan_generation,
-)
 
 SPAN_STORE_SCHEMA = "kh STRING, owner_doc BIGINT, batch_id INT"
 
@@ -134,22 +125,11 @@ def _append_kg(
     batch_id: int | None,
     id_col: str,
 ) -> int:
-    from . import store_fs
-
-    ensure_no_orphan_generation(store_path)
-    root, init = _begin_store_write(store_path)
-    store = None if init else _read_store(spark, store_path)
-    if batch_id is None:
-        # next sequential id from the partition directory NAMES — the
-        # former agg(max(batch_id)) ran a full store scan per append
-        # (round 11; see store_fs.max_partition_value for equivalence)
-        prev = None if init else store_fs.max_partition_value(root, "batch_id")
-        bid = 0 if prev is None else int(prev) + 1
-    else:
-        bid = int(batch_id)
-
-    firsts = kg.groupBy("kh").agg(F.min(id_col).alias("owner_doc"))
-    if store is not None:
+    def first_seen(bid: int) -> DataFrame:
+        firsts = kg.groupBy("kh").agg(F.min(id_col).alias("owner_doc"))
+        store = store_fs.read_store(spark, store_path)
+        if store is None:
+            return firsts
         hist_khs = store.filter(F.col("batch_id") < bid).select("kh")
         # a history kh the batch never produced cannot eliminate any
         # firsts row — prune history before its anti-join exchange
@@ -160,20 +140,9 @@ def _append_kg(
         hist_khs = bloomjoin.prune_history(
             hist_khs, kg.select("kh"), ["kh"], history_batches=bid
         )
-        firsts = firsts.join(hist_khs, "kh", "left_anti")
-    out = firsts.withColumn("batch_id", F.lit(bid).cast("int"))
-    if batch_id is None:
-        out.write.mode("append").partitionBy("batch_id").parquet(root)
-    else:
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(root)
-        )
-    if init:
-        _commit_store_init(store_path)
-    return bid
+        return firsts.join(hist_khs, "kh", "left_anti")
+
+    return store_fs.write_batch(store_path, first_seen, batch_id=batch_id)
 
 
 def spans_for_batch(
@@ -211,7 +180,7 @@ def _spans_kg(
     k: int,
     id_col: str,
 ) -> DataFrame:
-    store = _read_store(spark, store_path)
+    store = store_fs.read_store(spark, store_path)
     if store is None:
         raise FileNotFoundError(
             f"k-gram store {store_path} has no committed generation"
@@ -374,10 +343,9 @@ def compact_span_store(spark: SparkSession, store_path: str) -> int:
     "does this kh exist, and who owns it", and first-arrival ownership
     survives the fold. Store rows are first-seen-distinct so the fold
     is mostly a relayout; shares the staged-swap crash posture with
-    the other stores (swap_in_generation). Returns batches folded."""
-    from .signature_store import swap_in_generation
-
-    store = _read_store(spark, store_path)
+    the other stores (store_fs.swap_in_generation). Returns batches
+    folded."""
+    store = store_fs.read_store(spark, store_path)
     if store is None:
         return 0
     n_batches = store.select("batch_id").distinct().count()
@@ -394,7 +362,7 @@ def compact_span_store(spark: SparkSession, store_path: str) -> int:
     def _write(tmp: str) -> None:
         folded.write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
 
-    swap_in_generation(store_path, _write)
+    store_fs.swap_in_generation(store_path, _write)
     return n_batches
 
 
@@ -472,10 +440,7 @@ def streaming_substring_dedup(
             )
         # staged so the owner join + islands windows run once, not once
         # for the emptiness probe and again for the write
-        spans = (
-            raw.withColumn("batch_id", F.lit(batch_id))
-            .transform(stage)
-        )
+        spans = raw.transform(stage)
         # a zero-span batch would write a partitioned dir with NO data
         # files (partition dirs derive from rows), leaving a sink that
         # spark.read.parquet rejects with "unable to infer schema"
@@ -487,9 +452,9 @@ def streaming_substring_dedup(
         # The sink is a generation store since round 8 — it shares the
         # stores' compaction/retention (compact_sink_batches).
         if spans.isEmpty():
-            _sink_delete_batch(spans_path, batch_id)
+            store_fs.delete_sink_batch(spans_path, batch_id)
             return
-        _sink_write_batch(spans, spans_path)
+        store_fs.write_batch(spans_path, spans, batch_id=batch_id)
 
     writer = docs_stream.writeStream.queryName("substring_dedup").option(
         "checkpointLocation", checkpoint_dir
@@ -510,5 +475,5 @@ def read_span_sink(
     schema = (
         f"{id_col} BIGINT, span_start BIGINT, span_end BIGINT, batch_id INT"
     )
-    got = _read_sink(spark, spans_path)
+    got = store_fs.read_sink(spark, spans_path)
     return got if got is not None else spark.createDataFrame([], schema)

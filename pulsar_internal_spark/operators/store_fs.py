@@ -1,14 +1,17 @@
-"""Filesystem routing for incremental-store maintenance.
+"""Filesystem routing and the generation-store protocol.
 
-The four persisted stores (signature, sketch, span, IVF) implement
-their crash posture — orphan guard, staged generation swap, batch
-expiry — with directory probes, renames and recursive deletes. Those
-operations must hit the SAME filesystem the store lives on: an
-os-level call against an ``hdfs://`` URI silently answers "no such
-directory", which would no-op the orphan guard and build compaction
-generations on the driver's local disk while the real store sat
-untouched (the silent-no-op hazard the pre-round-6 loud-failure guard
-existed to stop).
+Every persisted, batch-partitioned store — the banded signature
+store, the k-gram span store, the count-min sketch store, the IVF
+index cells and the streaming sinks — lives behind this module: it
+owns the orphan guard, the batch write (:func:`write_batch` — the one
+routine every store appender calls), the pointer commit, the staged
+generation swap (:func:`swap_in_generation`), the maintenance lease
+and batch expiry. Those operations must hit the SAME filesystem the
+store lives on: an os-level call against an ``hdfs://`` URI silently
+answers "no such directory", which would no-op the orphan guard and
+build compaction generations on the driver's local disk while the
+real store sat untouched (the silent-no-op hazard the pre-round-6
+loud-failure guard existed to stop).
 
 Routing rule: a path WITH a URI scheme (``file://``, ``hdfs://``,
 ``s3a://``, ...) goes through the Hadoop FileSystem API of the active
@@ -41,7 +44,11 @@ there); that is now the only S3 degradation left.
 
 from __future__ import annotations
 
-from typing import Callable
+from contextlib import contextmanager
+from typing import TYPE_CHECKING, Callable
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
 
 
 def has_scheme(path: str) -> bool:
@@ -350,3 +357,260 @@ def expire_prefixed_partitions(
             delete_dir(join(path, d))
             removed.append(d)
     return removed
+
+
+# -- generation-store protocol --------------------------------------------
+
+
+def read_store(spark: SparkSession, store_path: str) -> DataFrame | None:
+    """Read a generation store via its pointer: None = no committed
+    generation yet (first batch). A pointer that references a missing
+    directory is damage, not a fresh store — the read then fails
+    loudly instead of silently restarting batch numbering at 0."""
+    root = resolve_current(store_path)
+    return None if root is None else spark.read.parquet(root)
+
+
+def ensure_no_orphan_generation(store_path: str) -> str | None:
+    """Damage guard run by every store writer; returns the live
+    generation name (None for a store with no committed generation).
+    The pointer is only ever written AFTER its target is complete, and
+    maintenance leftovers (generations without a pointer reference)
+    are inert and swept under the lease, so what remains detectable is
+    MANUAL damage — and both shapes refuse rather than silently
+    restart the store:
+
+      - pointer present but its generation dir missing (someone
+        deleted data out from under the pointer);
+      - generations BEYOND gen-00000000 present with no pointer
+        (someone deleted the pointer of a real store — gen-00000000
+        alone without a pointer is the one legitimate crash state, a
+        first append that died pre-commit, and is rebuilt by
+        :func:`write_batch`).
+
+    Probes run on the STORE'S OWN filesystem — an os probe against
+    hdfs:// would silently answer "absent" and evaporate this guard."""
+    base = store_path.rstrip("/")
+    gen = read_pointer(base)
+    if gen is not None:
+        if not is_dir(join(base, gen)):
+            raise RuntimeError(
+                f"store {base} pointer references {gen} but that "
+                "generation directory is missing — restore it or point "
+                f"{POINTER} at a surviving {GEN_PREFIX}* dir"
+            )
+        return gen
+    gens = list_generations(base)
+    if [g for g in gens if g != FIRST_GEN]:
+        raise RuntimeError(
+            f"store {base} has generations {gens} but no "
+            f"{POINTER} pointer — a real store lost its pointer "
+            "file; recover by writing the live generation's name into it"
+        )
+    return None
+
+
+def _max_batch_id(root: str, outer: tuple[str, ...]) -> int | None:
+    """Highest ``batch_id=N`` directory under ``root``, walking the
+    ``outer`` partition levels above it (``cell=*/`` for the IVF
+    cells) — directory names only, no Spark job."""
+    dirs = [root]
+    for col in outer:
+        dirs = [
+            join(d, name)
+            for d in dirs
+            for name in list_subdirs(d)
+            if name.startswith(f"{col}=")
+        ]
+    vals = [max_partition_value(d, "batch_id") for d in dirs]
+    vals = [v for v in vals if v is not None]
+    return max(vals) if vals else None
+
+
+def write_batch(
+    store_path: str,
+    rows: DataFrame | Callable[[int], DataFrame],
+    *,
+    batch_id: int | None = None,
+    partition_by: tuple[str, ...] = ("batch_id",),
+) -> int:
+    """Land one batch in a generation store — the single write routine
+    behind every store appender and streaming sink. Returns the batch
+    id used. ``rows`` is the batch's payload frame, or a function of
+    the batch id for stores that need the id to build their rows (the
+    span store's history anti-join); the routine stamps the
+    ``batch_id`` column and partitions by ``partition_by``, which ends
+    with ``batch_id``.
+
+    Batch id: an EXPLICIT ``batch_id`` is written with dynamic
+    partition overwrite, so a replayed batch replaces exactly its own
+    partitions — the idempotent write keyed on the batch id that makes
+    foreachBatch exactly-once. ``batch_id=None`` appends under the
+    next sequential id, read from the partition directory NAMES (a
+    batch with rows always has its directory; an empty batch writes
+    none and was invisible to a max(batch_id) scan too).
+
+    Crash contract, one copy for every store:
+      - the orphan guard (:func:`ensure_no_orphan_generation`) refuses
+        manually damaged stores before anything is written;
+      - a fresh store writes gen-00000000 and commits the pointer only
+        AFTER the parquet write succeeds, so the pointer never names
+        an incomplete generation;
+      - a first write that died before its pointer commit leaves
+        gen-00000000 without a pointer; its caller never saw success,
+        so by the replay contract the batch comes again, and the retry
+        REBUILDS gen-00000000 (stacking onto the leftover would double
+        its rows);
+      - a write into a committed generation that dies mid-way leaves a
+        partial partition, replaced when the batch replays under its
+        explicit id (or removed by deleting that one directory)."""
+    from pyspark.sql import functions as F
+
+    base = store_path.rstrip("/")
+    gen = ensure_no_orphan_generation(base)
+    root = join(base, gen or FIRST_GEN)
+    if gen is None:
+        delete_dir(root, ignore_missing=True)
+    if batch_id is None:
+        prev = None if gen is None else _max_batch_id(root, partition_by[:-1])
+        bid = 0 if prev is None else prev + 1
+    else:
+        bid = int(batch_id)
+    frame = rows(bid) if callable(rows) else rows
+    out = (
+        frame.withColumn("batch_id", F.lit(bid).cast("int"))
+        .write.partitionBy(*partition_by)
+    )
+    if batch_id is None:
+        out.mode("append").parquet(root)
+    else:
+        # a per-write option scopes the dynamic overwrite to THIS write
+        # — no session conf to save and restore
+        (
+            out.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(root)
+        )
+    if gen is None:
+        write_pointer(base, FIRST_GEN)
+    return bid
+
+
+def delete_sink_batch(sink_path: str, batch_id: int) -> None:
+    """Strict replace-on-replay for a zero-row replayed sink batch:
+    remove the partition a pre-crash attempt may have left in the
+    sink's live generation (no-op for an uncommitted sink)."""
+    root = resolve_current(sink_path.rstrip("/"))
+    if root is not None:
+        delete_dir(join(root, f"batch_id={batch_id}"), ignore_missing=True)
+
+
+def read_sink(spark: SparkSession, sink_path: str) -> DataFrame | None:
+    """Generation-aware sink read: None until the first non-empty batch
+    commits gen-0. A PRE-round-8 flat sink (batch_id=N dirs with no
+    pointer) must fail loudly instead of silently serving an empty
+    frame — recover by moving the batch_id=* dirs under
+    {sink}/gen-00000000/ and writing the pointer."""
+    sink = sink_path.rstrip("/")
+    got = read_store(spark, sink)
+    if got is not None:
+        return got
+    if is_dir(sink) and any(d.startswith("batch_id=") for d in list_subdirs(sink)):
+        raise RuntimeError(
+            f"sink {sink} holds flat batch_id=* partitions but no "
+            f"{POINTER} pointer — a pre-generation (round <8) sink "
+            f"layout; migrate by moving the batch_id=* dirs under "
+            f"{FIRST_GEN}/ and writing the pointer"
+        )
+    return None
+
+
+@contextmanager
+def maintenance_lease(store_path: str):
+    """Advisory single-maintainer lease over a store: an atomic
+    create-exclusive marker at ``{store}.lease`` held for the duration
+    of a maintenance operation. A second maintainer (e.g. two cron'd
+    compactions overlapping) fails LOUDLY instead of interleaving with
+    the first one's swap. A maintainer that FAILS mid-window — process
+    crash OR in-process exception — leaves the marker behind,
+    deliberately: the recovery message routes the operator through the
+    orphan-generation check before releasing, because an expired-TTL
+    auto-steal (or an auto-release on a half-done swap) could put two
+    live maintainers in the window, which is the exact failure the
+    lease exists to prevent. The marker is removed only on SUCCESSFUL
+    completion of the window's body. Atomic on local and HDFS;
+    best-effort on S3 (see create_exclusive)."""
+    lease = store_path.rstrip("/") + ".lease"
+    if not create_exclusive(lease):
+        raise RuntimeError(
+            f"maintenance lease {lease} is already held — another "
+            "maintainer is active, or a previous one crashed mid-window. "
+            "Verify no maintenance job is running and the store passes "
+            "ensure_no_orphan_generation, then delete the marker to "
+            "recover."
+        )
+    yield
+    # reached only when the body completed without raising: a failed
+    # maintenance window keeps the lease so the next attempt is routed
+    # through the loud recovery path above instead of racing leftovers
+    delete_file(lease)
+
+
+def swap_in_generation(store_path: str, write_tmp) -> None:
+    """Generation commit for every store compaction: under the
+    maintenance lease, sweep unreferenced generation leftovers of
+    prior crashed runs, have ``write_tmp(next_gen_dir)`` materialize
+    the next generation IN FULL, atomically replace the ``current``
+    pointer, then delete the superseded generation.
+
+    Crash windows, all benign:
+      - died before the pointer flip: the pointer still names the old
+        generation; the half-built next one is unreferenced and inert,
+        swept by the next maintenance window;
+      - died after the flip, before cleanup: the store serves the new
+        generation; the old one is unreferenced and swept later;
+      - readers NEVER see an absent store path — both generations
+        exist across the flip and the pointer replace is atomic
+        (os.replace locally; ~20-byte create-overwrite via Hadoop,
+        whose only reader-visible hazard is the bounded empty-pointer
+        retry in read_pointer).
+
+    The single-MAINTAINER half of the window contract is ENFORCED by
+    the lease (maintainer-vs-APPEND exclusion remains the operator's
+    scheduling responsibility — appends are not leased by design).
+
+    LEASE FENCING: on S3 the lease's create-exclusive is only
+    best-effort, so two maintainers CAN both enter the window. Two
+    mechanisms remove every SILENT failure path: (a) each attempt
+    stages into its OWN generation dir (per-attempt nonce —
+    next_generation), so concurrent maintainers never interleave
+    parquet writes in one directory; (b) the swap re-reads the pointer
+    immediately before its flip and ABORTS loudly if it no longer
+    names the generation read at window start — the loser's half-built
+    dir stays unreferenced (inert, swept later) and the winner's
+    commit is never silently overwritten. The residue without a CAS
+    primitive is the ~20-byte PUT race between the fence check and the
+    flip, and a concurrent sweep deleting an in-progress staging dir —
+    both surface as loud job failures, never as silently wrong data."""
+    base = store_path.rstrip("/")
+    with maintenance_lease(base):
+        cur = ensure_no_orphan_generation(base)
+        if cur is None:
+            raise FileNotFoundError(
+                f"store {base} has no committed generation to compact"
+            )
+        sweep_stale_generations(base, keep=cur)
+        nxt = next_generation(cur)
+        write_tmp(join(base, nxt))
+        fence = read_pointer(base)
+        if fence != cur:
+            raise RuntimeError(
+                f"store {base} pointer moved {cur} -> {fence} during the "
+                "maintenance window — a concurrent maintainer committed "
+                "under a lost lease. Aborting WITHOUT flipping: the other "
+                "maintainer's generation stays live; this window's "
+                f"half-built {nxt} is unreferenced and will be swept by "
+                "the next successful window."
+            )
+        write_pointer(base, nxt)
+        delete_dir(join(base, cur))

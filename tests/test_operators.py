@@ -1064,29 +1064,81 @@ def test_incremental_minhash_empty_and_single_batches(spark, tmp_path):
     assert S.candidates_for_batch(spark, store, 1).count() == 0
 
 
-def test_store_next_batch_id_from_partition_listing(spark, tmp_path):
-    """Sequential batch-id assignment now reads the partition directory
-    names (store_fs.max_partition_value) instead of an agg(max) scan
-    per append (round 11) — pin the equivalence: sequencing across
-    appends, gap-free after an explicit high id, and None on a fresh
-    root."""
+def _store_writer(spark, kind: str, base: str):
+    """(write, store) for one generation-store writer: ``write(n,
+    batch_id=None)`` lands the n-th batch of fresh rows in the store at
+    ``store`` and returns the batch id used. Every batch's rows are
+    new (the span store keeps first-seen k-grams only, so a repeated
+    batch would write no partition). The IVF index is built first —
+    appends never create one — so its build is batch 0."""
+    import numpy as np
+
     from pulsar_internal_spark.operators import signature_store as S
+    from pulsar_internal_spark.operators import sketches as SK
+    from pulsar_internal_spark.operators import span_store as SS
     from pulsar_internal_spark.operators import store_fs
 
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta"),
-         (2, "alpha beta gamma delta epsilon zeta")],
-        ["doc_id", "text"],
-    )
-    store = str(tmp_path / "sigstore_listing")
-    assert S.append_signature_batch(spark, docs, store) == 0
-    assert S.append_signature_batch(spark, docs, store) == 1
+    def docs(n):
+        return spark.createDataFrame(
+            [(10 * n + i, f"u{n}a u{n}b u{n}c alpha beta gamma") for i in range(2)],
+            "doc_id long, text string",
+        )
+
+    if kind == "signature":
+        return (lambda n, batch_id=None: S.append_signature_batch(
+            spark, docs(n), base, batch_id=batch_id)), base
+    if kind == "span":
+        return (lambda n, batch_id=None: SS.append_kgram_batch(
+            spark, docs(n), base, batch_id=batch_id, k=3)), base
+    if kind == "sketch":
+        return (lambda n, batch_id=None: SK.append_sketch_batch(
+            spark, docs(n).select(F.explode(F.split("text", " ")).alias("w")),
+            base, batch_id=batch_id)), base
+    if kind == "sink":
+        return (lambda n, batch_id=None: store_fs.write_batch(
+            base,
+            spark.createDataFrame([(n, n + 1)], "id_a BIGINT, id_b BIGINT"),
+            batch_id=batch_id,
+        )), base
+    assert kind == "ivf", kind
+    rng = np.random.default_rng(5)
+
+    def vecs(n, count=10):
+        return spark.createDataFrame(
+            [(100 * n + i, [float(x) for x in rng.normal(size=8)])
+             for i in range(count)],
+            "vec_id long, embedding array<float>",
+        )
+
+    sim.build_ivf_index(vecs(99, count=30), base, num_centroids=4)
+    return (lambda n, batch_id=None: sim.ivf_index_append(
+        spark, vecs(n), base, batch_id=batch_id)), f"{base}/cells"
+
+
+STORE_WRITERS = ["signature", "span", "sketch", "sink"]
+
+
+@pytest.mark.parametrize("kind", STORE_WRITERS + ["ivf"])
+def test_store_next_batch_id_from_partition_listing(spark, tmp_path, kind):
+    """Sequential batch-id assignment reads the partition directory
+    names (walking ``cell=*/`` for the IVF cells) instead of an
+    agg(max) scan per append — pin the rule for every generation-store
+    writer: sequencing across appends, gap-free after an explicit high
+    id, and batch 0 on a fresh store."""
+    from pulsar_internal_spark.operators import store_fs
+
+    write, store = _store_writer(spark, kind, str(tmp_path / kind))
+    first = 1 if kind == "ivf" else 0
+    assert [write(0), write(1)] == [first, first + 1]
     # explicit high id, then sequential resumes after it (same as the
     # old agg(max) + 1 rule)
-    S.append_signature_batch(spark, docs, store, batch_id=7)
-    assert S.append_signature_batch(spark, docs, store) == 8
+    assert write(2, batch_id=7) == 7
+    assert write(3) == 8
+    got = store_fs.read_store(spark, store).select("batch_id").distinct()
+    assert sorted(r.batch_id for r in got.collect()) == sorted(
+        {0, first, first + 1, 7, 8}
+    )
     root = store_fs.resolve_current(store)
-    assert store_fs.max_partition_value(root, "batch_id") == 8
     assert store_fs.max_partition_value(root, "nope") is None
 
 
@@ -1815,8 +1867,16 @@ def test_append_kgram_batch_releases_its_staged_blocks(spark, tmp_path):
     block-manager pressure within a few batches; a pre-existing staged
     frame must survive untouched."""
     from pulsar_internal_spark.operators import span_store as SS
-    from pulsar_internal_spark.staging import persistent_rdd_ids, stage
+    from pulsar_internal_spark.staging import (
+        persistent_rdd_ids,
+        release_staged,
+        stage,
+    )
 
+    # start from an empty block manager: blocks staged by earlier tests
+    # are unpersisted by Spark's ContextCleaner whenever their frames
+    # are garbage-collected, which would shrink the baseline mid-test
+    release_staged(spark)
     keeper = stage(spark.range(5))
     baseline = persistent_rdd_ids(spark)
     assert baseline, "stage() should pin at least one RDD"
@@ -1833,42 +1893,37 @@ def test_append_kgram_batch_releases_its_staged_blocks(spark, tmp_path):
         )
     assert keeper.count() == 5  # the pre-existing staged frame survived
     spark.sparkContext._jsc.getPersistentRDDs()  # handle still valid
-    from pulsar_internal_spark.staging import release_staged
-
     release_staged(spark)
     assert not persistent_rdd_ids(spark)
 
 
-def test_crashed_first_append_is_rebuilt(spark, tmp_path):
+@pytest.mark.parametrize("kind", STORE_WRITERS)
+def test_crashed_first_append_is_rebuilt(spark, tmp_path, kind):
     """A first append that died AFTER creating gen-00000000 but BEFORE
     the pointer commit leaves the one legitimate pointerless state; by
     the replay contract its caller never saw success, so the retry
     must REBUILD gen-0 (stacking onto the leftover would double rows)
-    and commit the pointer. Any other pointerless generation refuses
-    (covered by the damage-guard tests)."""
+    and commit the pointer — for every generation-store writer. Any
+    other pointerless generation refuses (covered by the damage-guard
+    tests)."""
     import os
 
-    from pulsar_internal_spark.operators import signature_store as S
     from pulsar_internal_spark.operators import store_fs
 
-    docs = spark.createDataFrame(
-        [(i, f"w{i} w{i + 1} w{i + 2} alpha beta gamma delta") for i in range(6)],
-        "doc_id long, text string",
-    )
-    store = str(tmp_path / "crashed_first")
+    write, store = _store_writer(spark, kind, str(tmp_path / "crashed_first"))
     leftover = os.path.join(store, store_fs.FIRST_GEN)
     os.makedirs(os.path.join(leftover, "batch_id=0"))
     with open(os.path.join(leftover, "batch_id=0", "_junk"), "w") as f:
         f.write("partial crashed write")
     assert store_fs.read_pointer(store) is None
 
-    assert S.append_signature_batch(spark, docs, store) == 0
+    assert write(0) == 0
     assert store_fs.read_pointer(store) == store_fs.FIRST_GEN
     assert not os.path.exists(
         os.path.join(leftover, "batch_id=0", "_junk")
     ), "retry must rebuild gen-0, not stack onto the crashed leftover"
     # and the rebuilt store is a normal store: next append increments
-    assert S.append_signature_batch(spark, docs, store) == 1
+    assert write(1) == 1
 
 
 def test_maintenance_lease_blocks_concurrent_maintainers(spark, tmp_path):
@@ -1882,6 +1937,7 @@ def test_maintenance_lease_blocks_concurrent_maintainers(spark, tmp_path):
     import pytest
 
     from pulsar_internal_spark.operators import signature_store as S
+    from pulsar_internal_spark.operators import store_fs
 
     docs = spark.createDataFrame(
         [(i, f"w{i} w{i + 1} w{i + 2} alpha beta gamma delta") for i in range(8)],
@@ -1905,7 +1961,7 @@ def test_maintenance_lease_blocks_concurrent_maintainers(spark, tmp_path):
     # second compaction; release re-admits it
     S.append_signature_batch(spark, docs.filter("doc_id >= 4"), store)
     uri = "file://" + store
-    with S.maintenance_lease(uri):
+    with store_fs.maintenance_lease(uri):
         with pytest.raises(RuntimeError, match="lease .* already held"):
             S.compact_store(spark, uri)
     assert S.compact_store(spark, uri) == 2
@@ -1921,24 +1977,24 @@ def test_maintenance_lease_kept_on_inprocess_failure(spark, tmp_path):
 
     import pytest
 
-    from pulsar_internal_spark.operators import signature_store as S
+    from pulsar_internal_spark.operators import store_fs
 
     store = str(tmp_path / "fail_store")
     os.makedirs(store)
     lease = store + ".lease"
 
     with pytest.raises(ValueError, match="mid-window"):
-        with S.maintenance_lease(store):
+        with store_fs.maintenance_lease(store):
             raise ValueError("simulated failure mid-window")
     assert os.path.exists(lease), "failed window must keep the lease"
 
     # recovery: operator verifies + deletes the marker, then the next
     # window acquires and (on success) releases it
     with pytest.raises(RuntimeError, match="lease .* already held"):
-        with S.maintenance_lease(store):
+        with store_fs.maintenance_lease(store):
             pass
     os.remove(lease)
-    with S.maintenance_lease(store):
+    with store_fs.maintenance_lease(store):
         pass
     assert not os.path.exists(lease), "successful window must release"
 
@@ -2215,18 +2271,18 @@ def test_store_maintenance_routes_uris_via_hadoop_fs(spark, tmp_path):
         os.path.join(local, cur), os.path.join(local, cur) + "_hidden"
     )
     with pytest.raises(RuntimeError, match="generation directory is missing"):
-        S.ensure_no_orphan_generation(uri)
+        store_fs.ensure_no_orphan_generation(uri)
     os.rename(
         os.path.join(local, cur) + "_hidden", os.path.join(local, cur)
     )
     os.remove(os.path.join(local, store_fs.POINTER))
     with pytest.raises(RuntimeError, match="lost its pointer"):
-        S.ensure_no_orphan_generation(uri)
+        store_fs.ensure_no_orphan_generation(uri)
     store_fs.write_pointer(uri, cur)  # operator recovery via Hadoop route
     assert store_fs.read_pointer(local) == cur
     # and a clean missing store stays a no-op on both routes
-    S.ensure_no_orphan_generation(str(tmp_path / "fresh"))
-    S.ensure_no_orphan_generation("file://" + str(tmp_path / "fresh"))
+    store_fs.ensure_no_orphan_generation(str(tmp_path / "fresh"))
+    store_fs.ensure_no_orphan_generation("file://" + str(tmp_path / "fresh"))
 
 
 @settings(
@@ -2809,7 +2865,7 @@ def test_sink_compaction_and_retention(spark, tmp_path):
             [(10 * b + i, 10 * b + i + 1, b) for i in range(3)],
             "id_a BIGINT, id_b BIGINT, batch_id INT",
         )
-        S._sink_write_batch(frame, sink)
+        store_fs.write_batch(sink, frame, batch_id=b)
 
     before = {
         (r.id_a, r.id_b) for r in S.read_candidates_sink(spark, sink).collect()
@@ -2883,7 +2939,7 @@ def test_swap_fence_aborts_loser_under_lost_lease(spark, tmp_path):
         S.append_banded_batch(spark, frame, store, batch_id=b)
     want = {
         (r.id, r.band_idx, r.band_key, 0)
-        for r in S._read_store(spark, store).drop("batch_id").collect()
+        for r in store_fs.read_store(spark, store).drop("batch_id").collect()
     }
 
     loser_dirs: list[str] = []
@@ -2891,7 +2947,7 @@ def test_swap_fence_aborts_loser_under_lost_lease(spark, tmp_path):
     def loser_write(tmp: str) -> None:
         loser_dirs.append(tmp)
         # stage the loser's generation in full...
-        S._read_store(spark, store).withColumn(
+        store_fs.read_store(spark, store).withColumn(
             "batch_id", F.lit(0)
         ).write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
         # ...then simulate the lost lease: the marker evaporates (S3
@@ -2900,14 +2956,14 @@ def test_swap_fence_aborts_loser_under_lost_lease(spark, tmp_path):
         assert S.compact_store(spark, store) == 3  # the winner commits
 
     with _pytest.raises(RuntimeError, match="pointer moved"):
-        S.swap_in_generation(store, loser_write)
+        store_fs.swap_in_generation(store, loser_write)
 
     # winner serves; loser never flipped
     cur = store_fs.read_pointer(store)
     assert cur is not None and os.path.join(store, cur) != loser_dirs[0]
     got = {
         (r.id, r.band_idx, r.band_key, r.batch_id)
-        for r in S._read_store(spark, store).collect()
+        for r in store_fs.read_store(spark, store).collect()
     }
     assert got == want, "winner's compacted store must serve identically"
     # the loser's uniquely-named staging dir was unreferenced from the

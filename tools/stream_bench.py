@@ -64,6 +64,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from pulsar_internal_spark.operators import signature_store as sig  # noqa: E402
 from pulsar_internal_spark.operators import span_store as spans  # noqa: E402
 from pulsar_internal_spark.operators import similarity as sim  # noqa: E402
+from pulsar_internal_spark.operators import store_fs  # noqa: E402
 from pulsar_internal_spark.session import get_spark  # noqa: E402
 from pulsar_internal_spark.staging import release_staged  # noqa: E402
 from tools.scale_bench import StageMetrics  # noqa: E402
@@ -250,7 +251,7 @@ def main() -> None:
     feed_t0 = time.perf_counter()
     for b in range(SINK_BATCHES):
         frame = pair_src.filter(F.col("batch_id") == b)
-        sig._sink_write_batch(frame, sink)
+        store_fs.write_batch(sink, frame, batch_id=b)
     feed_s = round(time.perf_counter() - feed_t0, 3)
 
     def read_all():
